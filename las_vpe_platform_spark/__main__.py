@@ -4,8 +4,9 @@ The reference submits work by producing command strings to a Kafka
 topic that MessageHandlingApp compiles into per-task ExecutionPlans
 (MessageHandlingApp.java:113-125, 214-337). This CLI is the same
 vocabulary driven directly: ``run`` compiles a command and executes it
-as one Spark plan over a video table; ``compact`` is the HAR-packing
-maintenance analog (K4); ``query`` runs any catalog entry.
+as one Spark plan over a video table, with one fixed fake tracker and
+one fixed fake recognizer (no provider selection); ``compact`` is the
+HAR-packing maintenance analog (K4); ``query`` runs any catalog entry.
 
     python -m las_vpe_platform_spark run track-attrrecog \
         --videos fixtures/videos.parquet --output /tmp/out
@@ -35,13 +36,7 @@ def _cmd_run(args: argparse.Namespace) -> int:
         print(f"unknown command {args.command!r}; known: {COMMANDS}", file=sys.stderr)
         return 2
     videos = spark.read.parquet(args.videos)
-    ex = BatchExecutor(
-        spark,
-        output_dir=args.output,
-        tracker=args.tracker,
-        recognizer=args.recognizer,
-    )
-    outputs = ex.run(plan, videos)
+    outputs = BatchExecutor(spark, output_dir=args.output).run(plan, videos)
     for stream, df in outputs.items():
         print(f"{stream}: {df.count()} rows")
     return 0
@@ -90,8 +85,6 @@ def build_parser() -> argparse.ArgumentParser:
     run.add_argument("command", help="e.g. track-attrrecog (MessageHandlingApp vocabulary)")
     run.add_argument("--videos", required=True, help="video table parquet path")
     run.add_argument("--output", default=None, help="sink directory (omit for dry run)")
-    run.add_argument("--tracker", default="fake")
-    run.add_argument("--recognizer", default="fake_sql")
     run.set_defaults(fn=_cmd_run)
 
     q = sub.add_parser("query", help="run a catalog query")

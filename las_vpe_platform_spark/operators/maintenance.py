@@ -209,20 +209,22 @@ def compact_upsert_table(
 
 
 def table_stats(spark: SparkSession, table_dir: str) -> DataFrame:
-    """File-level stats for deciding when to compact."""
-    rows = []
-    for root, _dirs, files in os.walk(table_dir):
-        for f in files:
-            if f.endswith(".parquet"):
-                p = os.path.join(root, f)
-                rows.append((p, os.path.getsize(p)))
-    from las_vpe_platform_spark.sources.tables import inline_rows
-
-    # zero-task LocalRelation, not a per-core Python RDD (r13, guide §4)
-    return inline_rows(spark, rows, "path string, bytes long").agg(
-        F.count(F.lit(1)).alias("n_files"),
-        F.sum("bytes").alias("total_bytes"),
-        F.avg("bytes").alias("avg_bytes"),
+    """File-level stats for deciding when to compact: one row of
+    ``n_files``, ``total_bytes``, ``avg_bytes`` (NULL sizes when the
+    directory holds no parquet file). Summed on the driver, so the
+    plan is one literal row however many files the table has."""
+    sizes = [
+        os.path.getsize(os.path.join(root, f))
+        for root, _dirs, files in os.walk(table_dir)
+        for f in files
+        if f.endswith(".parquet")
+    ]
+    total = sum(sizes) if sizes else None
+    avg = total / len(sizes) if sizes else None
+    return spark.sql("SELECT 1").select(
+        F.lit(len(sizes)).cast("long").alias("n_files"),
+        F.lit(total).cast("long").alias("total_bytes"),
+        F.lit(avg).cast("double").alias("avg_bytes"),
     )
 
 

@@ -25,10 +25,13 @@ from typing import Any, Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from las_vpe_platform_spark.operators.aggregates import wide_avg
 from las_vpe_platform_spark.operators.joins import pairwise_similarity_topk
 from las_vpe_platform_spark.operators.routing import term_sig_filter
-from las_vpe_platform_spark.schemas import ATTRIBUTE_NAMES
+from las_vpe_platform_spark.providers import (
+    fake_recognizer_sql_avg,
+    fake_tracker,
+    recognizer_drop_filter,
+)
 
 
 @dataclass
@@ -41,17 +44,14 @@ class Node:
     exec_data: dict[str, Any] = field(default_factory=dict)
     # (successor node_id, port name) — Node.outputTo(Port)
     out_edges: list[tuple[int, str]] = field(default_factory=list)
-    executed: bool = False
 
 
 class ExecutionPlan:
     """DAG of Nodes (TaskData.ExecutionPlan, TaskData.java:162-227).
 
     Unlike the reference, the plan never ships with data — it lives on
-    the driver and compiles to one Spark logical plan, so ``combine``
-    (merging executed-markers from two plan copies that travelled on
-    different Kafka branches, :179-183) degenerates to a set union and
-    ``mark_executed`` no longer needs to free per-message memory.
+    the driver and compiles to one Spark logical plan, so there are no
+    per-copy executed-markers to merge across Kafka branches (:179-183).
     """
 
     def __init__(self) -> None:
@@ -93,14 +93,6 @@ class ExecutionPlan:
         if len(order) != len(self.nodes):
             raise ValueError("cycle in execution plan")
         return order
-
-    def mark_executed(self, node_id: int) -> None:
-        self.nodes[node_id].executed = True
-
-    def combine(self, other: "ExecutionPlan") -> None:
-        for node_id, node in other.nodes.items():
-            if node.executed and node_id in self.nodes:
-                self.nodes[node_id].executed = True
 
 
 # --- command vocabulary (MessageHandlingApp.java:113-125) -------------------
@@ -183,6 +175,8 @@ class BatchExecutor:
     Stage lambdas replace the reference's per-app foreachRDD bodies;
     sink stages write partitioned parquet (the Parquet re-expression of
     the HDFS/HAR tracklet store + Neo4j person table, SURVEY K2-K8).
+    The tracker is ``fake_tracker`` and the recognizer is the fused
+    ``fake_recognizer_sql_avg``: one fixed provider per stage.
 
     ``term_sigs`` (optional) applies the P4 cancellation anti-join at
     the source, exactly where SparkStreamingApp.java:253-256 does.
@@ -192,25 +186,13 @@ class BatchExecutor:
         self,
         spark: SparkSession,
         output_dir: str | None = None,
-        tracker: str = "fake",
-        recognizer: str = "fake_sql",
         gallery: DataFrame | None = None,
         term_sigs: DataFrame | None = None,
     ) -> None:
-        from las_vpe_platform_spark.providers import (
-            RECOGNIZER_AVG_PROVIDERS,
-            RECOGNIZER_PROVIDERS,
-            TRACKER_PROVIDERS,
-        )
-
         self.spark = spark
         self.output_dir = output_dir
-        self.track_fn = TRACKER_PROVIDERS[tracker]
-        self.recog_fn = RECOGNIZER_PROVIDERS[recognizer]
-        self.recog_avg_fn = RECOGNIZER_AVG_PROVIDERS.get(recognizer)
         self.gallery = gallery
         self.term_sigs = term_sigs
-        self._plan: ExecutionPlan | None = None  # set for the duration of run()
         self._stages: dict[str, Callable[[Node, dict[str, DataFrame]], DataFrame]] = {
             TRACKING: self._stage_tracking,
             ATTR_RECOG: self._stage_attr_recog,
@@ -225,17 +207,9 @@ class BatchExecutor:
     # -- stages ------------------------------------------------------------
 
     def _stage_tracking(self, node: Node, inputs: dict[str, DataFrame]) -> DataFrame:
-        videos = inputs["SOURCE"]
-        # unit-of-work repartition: tracking cost is per-VIDEO, so the
-        # task split must not inherit the source's file-block layout (a
-        # single-file catalog arrives as ONE partition and would track
-        # every video serially in one Python worker). Same rationale as
-        # the reference's per-video task fan-out
-        # (PedestrianTrackingApp.java: one RDD element per video).
-        par = videos.sparkSession.sparkContext.defaultParallelism
-        if videos.rdd.getNumPartitions() < par:
-            videos = videos.repartition(par)
-        tracklets = self.track_fn(videos)
+        # fake_tracker repartitions by video_id itself (per-video task
+        # fan-out, PedestrianTrackingApp.java: one RDD element per video)
+        tracklets = fake_tracker(inputs["SOURCE"])
         if self.term_sigs is not None:
             tracklets = term_sig_filter(tracklets, self.term_sigs, key="task_id")
         return tracklets
@@ -267,43 +241,23 @@ class BatchExecutor:
         )
 
     def _stage_attr_recog(self, node: Node, inputs: dict[str, DataFrame]) -> DataFrame:
-        from las_vpe_platform_spark.providers import recognizer_drop_filter
-
-        tracklets = inputs["TRACKLET"]
-        samples = self._explode_samples(tracklets)
+        samples = self._explode_samples(inputs["TRACKLET"])
         samples = samples.filter(recognizer_drop_filter(samples))
-        if self.recog_avg_fn is not None:
-            # fused recognize + A1 average (expression-defined
-            # recognizers compile ~2x faster this way; values identical)
-            return self.recog_avg_fn(samples)
-        per_sample = self.recog_fn(samples)
-        # A1: the 125-column per-tracklet average
-        return wide_avg(per_sample, ["tracklet_key"], ATTRIBUTE_NAMES)
+        # fused recognize + A1 per-tracklet average
+        return fake_recognizer_sql_avg(samples)
 
     def _stage_reid(self, node: Node, inputs: dict[str, DataFrame]) -> DataFrame:
-        # J1/J6 assembly then J9+W2 ranking against the feature gallery
-        if "TRACKLET_ATTR" in inputs:
-            assembled = inputs["TRACKLET_ATTR"]
+        # J1/J6 assembly then J9+W2 ranking against the feature gallery.
+        # In every compiled plan the ATTRIBUTES input is the ATTR_RECOG
+        # output of this node's own TRACKLET input, so its keys already
+        # are the assembled set and joining them back to the tracklets
+        # is an identity (one that would also run the tracker subtree a
+        # second time: Catalyst does not dedupe shared Python-UDTF
+        # subtrees). The reid command reads the stored assembly instead.
+        if "ATTRIBUTES" in inputs:
+            assembled = inputs["ATTRIBUTES"]
         else:
-            attrs = inputs["ATTRIBUTES"].select("tracklet_key", ATTRIBUTE_NAMES[0])
-            if self._attrs_subsume_tracklets(node):
-                # Join elimination: when the TRACKLET input is the SAME
-                # in-plan tracking node that (via ATTR_RECOG) produced
-                # ATTRIBUTES, every attr row's tracklet_key already
-                # passed through tracking + the recognizer drop filter,
-                # so attrs' keys ⊆ tracklet keys and the inner join is
-                # an identity.  Joining anyway makes Catalyst evaluate
-                # the tracker mapInPandas subtree TWICE inside one plan
-                # (it does not dedupe shared Python-UDTF subtrees, and
-                # caching the patch-bearing frame was measured slower
-                # than re-running the fake tracker) — at scale that
-                # doubles the dominant video->tracklet stage.  The join
-                # is kept for storage-fed plans (attrrecog-reid), where
-                # the TRACKLET re-scan is a cheap parquet read.
-                assembled = attrs
-            else:
-                tracklets = inputs["TRACKLET"].select("tracklet_key")
-                assembled = tracklets.join(attrs, on="tracklet_key", how="inner")
+            assembled = inputs["TRACKLET_ATTR"]
         if self.gallery is None:
             raise ValueError("reid stage requires a feature gallery DataFrame")
         probes = assembled.select("tracklet_key").join(
@@ -324,35 +278,6 @@ class BatchExecutor:
             ).getField("gallery_key").alias("id_rank")
         )
 
-    def _attrs_subsume_tracklets(self, node: Node) -> bool:
-        """True iff the reid node's TRACKLET parent is an in-plan
-        TRACKING node that is also an ancestor of its ATTRIBUTES parent
-        — the structural condition under which attrs' tracklet_keys are
-        a subset of the tracklet keys and the assembly join can be
-        eliminated (see _stage_reid)."""
-        plan = self._plan
-        if plan is None:
-            return False
-        t_parents = [p for p, port in plan.parents_of(node.node_id) if port == "TRACKLET"]
-        a_parents = [p for p, port in plan.parents_of(node.node_id) if port == "ATTRIBUTES"]
-        if len(t_parents) != 1 or len(a_parents) != 1:
-            return False
-        t_id = t_parents[0]
-        if plan.nodes[t_id].stream != TRACKING:
-            return False
-        # t_id must feed (transitively) the ATTRIBUTES parent
-        seen: set[int] = set()
-        stack = [a_parents[0]]
-        while stack:
-            nid = stack.pop()
-            for pid, _port in plan.parents_of(nid):
-                if pid == t_id:
-                    return True
-                if pid not in seen:
-                    seen.add(pid)
-                    stack.append(pid)
-        return False
-
     def _sink(self, table: str) -> Callable[[Node, dict[str, DataFrame]], DataFrame]:
         def write(node: Node, inputs: dict[str, DataFrame]) -> DataFrame:
             df = next(iter(inputs.values()))
@@ -372,19 +297,14 @@ class BatchExecutor:
         """
         results: dict[int, DataFrame] = {}
         outputs: dict[str, DataFrame] = {}
-        self._plan = plan
-        try:
-            for node in plan.topo_order():
-                parents = plan.parents_of(node.node_id)
-                if parents:
-                    inputs = {port: results[pid] for pid, port in parents}
-                else:
-                    inputs = {"SOURCE": source}
-                inputs.update({k: v for k, v in extra_inputs.items() if k not in inputs})
-                df = self._stages[node.stream](node, inputs)
-                results[node.node_id] = df
-                outputs[node.stream] = df
-                plan.mark_executed(node.node_id)
-        finally:
-            self._plan = None
+        for node in plan.topo_order():
+            parents = plan.parents_of(node.node_id)
+            if parents:
+                inputs = {port: results[pid] for pid, port in parents}
+            else:
+                inputs = {"SOURCE": source}
+            inputs.update({k: v for k, v in extra_inputs.items() if k not in inputs})
+            df = self._stages[node.stream](node, inputs)
+            results[node.node_id] = df
+            outputs[node.stream] = df
         return outputs

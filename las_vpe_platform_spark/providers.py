@@ -1,22 +1,22 @@
-"""Pluggable algorithm providers (SURVEY §2.10).
+"""Algorithm providers (SURVEY §2.10).
 
 The reference selects tracker/recognizer/comparer implementations at
 deployment time via an Algorithm enum + per-executor Singleton pool
 (PedestrianAttrRecogApp.java:61-66, 150-183; util/Singleton.java:33-96).
-Here each algorithm is a *provider*: a factory returning either a
+Here each algorithm is a *provider*: a function returning either a
 column expression set (JVM-side, fast path) or an Arrow-batched UDF
 (mapInPandas / pandas_udf) for model-backed implementations.
 
-Real model providers (JNI Caffe2, TensorFlow, socket-external) are
-stubbed with NotImplementedError — the container has no model runtime
-— but their Spark-side plumbing (schema, batching, worker-local model
-cache) is the part that matters and is real.
+There is no registry: the batch pipeline calls ``fake_tracker`` and
+``fake_recognizer_sql_avg`` directly. The pandas variants
+(``fake_recognizer_pandas``, ``fake_cross_encoder_pandas``) are the
+Arrow-batched shape a real model plugs into (schema, batching,
+worker-local model slot) and are parity-tested against the SQL fakes.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
-from typing import Any
+from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -66,24 +66,6 @@ def fake_tracker(videos: DataFrame) -> DataFrame:
         .mapInPandas(track_batches, TRACKLET)
     )
 
-
-def jni_tracker(videos: DataFrame) -> DataFrame:
-    """Plug point for the native tracker (BasicTracker.java:89-137).
-
-    On a real deployment this is the same mapInPandas shape as
-    ``fake_tracker`` with a worker-local model handle; no native
-    runtime exists in this container.
-    """
-    raise NotImplementedError(
-        "native tracker (reference: alg/pedestrian/tracking/BasicTracker.java:89-137) "
-        "requires a JNI runtime; use provider 'fake'"
-    )
-
-
-TRACKER_PROVIDERS: dict[str, Callable[[DataFrame], DataFrame]] = {
-    "fake": fake_tracker,
-    "basic_jni": jni_tracker,
-}
 
 # ---------------------------------------------------------------------------
 # Recognizers: tracklet samples -> 125 attribute columns
@@ -194,31 +176,6 @@ def fake_recognizer_sql_avg(samples: DataFrame, key_col: str = "tracklet_key",
     )
 
 
-def caffe2_recognizer(samples: DataFrame, **kwargs: Any) -> DataFrame:
-    """Plug point for DeepMAR (DeepMARCaffe2Native.java:86-99, 188-222):
-    iterator pandas UDF with a worker-local GPU model and Arrow batch
-    size as the inference batch. No model runtime in this container."""
-    raise NotImplementedError(
-        "DeepMAR CNN (reference: alg/pedestrian/attr/DeepMARCaffe2Native.java) "
-        "requires a model runtime; use provider 'fake_sql' or 'fake_pandas'"
-    )
-
-
-RECOGNIZER_PROVIDERS: dict[str, Callable[..., DataFrame]] = {
-    "fake_sql": fake_recognizer_sql,
-    "fake_pandas": fake_recognizer_pandas,
-    "deepmar_caffe2": caffe2_recognizer,
-}
-
-# Optional fused recognize+average (per-sample recognize -> per-tracklet
-# A1 mean in one provider call). The executor prefers this when the
-# selected recognizer registers one; providers without a fused form fall
-# back to recognize -> wide_avg.
-RECOGNIZER_AVG_PROVIDERS: dict[str, Callable[..., DataFrame]] = {
-    "fake_sql": fake_recognizer_sql_avg,
-}
-
-
 def recognizer_drop_filter(df: DataFrame, key_col: str = "tracklet_key") -> Column:
     """Which tracklets the recognizer never answers for (~10% — the
     fixture's late/missing-attribute simulation)."""
@@ -234,8 +191,8 @@ def fake_cross_encoder_sql(
     The reranking plug point of the retrieval path — the reference's
     pattern of model-behind-an-interface (PedestrianReIDerWithAttr,
     `FakePedestrianReIDerWithAttr.java:43-49`) applied to the q113
-    fused list: a real cross-encoder swaps in through
-    ``CROSS_ENCODERS`` without touching the plan around it.
+    fused list: a real cross-encoder replaces this function without
+    touching the plan around it.
     """
     return pairs.withColumn(
         "ce_score",
@@ -281,9 +238,3 @@ def fake_cross_encoder_pandas(
 
     return pairs.mapInPandas(score, out_schema)
 
-
-# reranker registry — the cross-encoder analog of RECOGNIZERS
-CROSS_ENCODERS = {
-    "fake_sql": fake_cross_encoder_sql,
-    "fake_pandas": fake_cross_encoder_pandas,
-}

@@ -4624,12 +4624,12 @@ Q114_SQL = _q114_sql()
 # The last stage of the production retrieval stack: retrieve wide
 # (q113's RRF fusion of BM25 + cosine), then RERANK the short list
 # with a pairwise (query, doc) model. The model is the plug point —
-# providers.CROSS_ENCODERS mirrors the reference's
-# model-behind-an-interface registry (FakePedestrianReIDerWithAttr
-# .java:43-49): here the deterministic fake scores via md5-unit
-# column expressions; a real cross-encoder swaps in through the
-# registry's mapInPandas path (parity-tested against the SQL fake)
-# without touching the surrounding plan. Scale shape: the model only
+# the reference's model-behind-an-interface pattern
+# (FakePedestrianReIDerWithAttr.java:43-49): here the deterministic
+# fake scores via md5-unit column expressions; a real cross-encoder
+# takes the mapInPandas shape of providers.fake_cross_encoder_pandas
+# (parity-tested against the SQL fake) without touching the
+# surrounding plan. Scale shape: the model only
 # ever sees the FUSED TOP-K (constant-sized at any corpus) — the
 # wide/cheap retrieval bounds the narrow/expensive model calls, which
 # is the entire economics of the rerank pattern.
@@ -9870,7 +9870,7 @@ FROM x GROUP BY 1
 # expensive scorer on probes x TSR_CAND_K rows ONLY (the whole point
 # of two-stage: the CE never sees the corpus). The CE is the pluggable
 # deterministic fake (providers.fake_cross_encoder_sql — a real model
-# swaps in through CROSS_ENCODERS without touching the plan); the
+# replaces that function without touching the plan); the
 # blend and final rank are exact-rank WindowGroupLimit per probe.
 
 TSR_PROBE_MOD = 97

@@ -805,12 +805,10 @@ FROM h GROUP BY 1, 2
 # --- d15: storage-fed attrrecog-reid (the OTHER reid command) ---------------
 # The ATTRRECOG_REID command of MessageHandlingApp.java:214-337:
 # tracklets arrive from STORAGE (RETRIEVE_TRACKLET with a serial-number
-# point filter, S6/S7) rather than from an in-plan tracker — which is
-# exactly the branch of _stage_reid where the tracklet<->attrs join is
-# KEPT (the r3 join elimination applies only when both sides trace to
-# one tracking node). d14 gates the eliminated-join path; this row
-# oracle-gates the kept-join path, so the elimination predicate can
-# never silently flip for storage-fed plans.
+# point filter, S6/S7) rather than from an in-plan tracker. As in d14,
+# _stage_reid ranks the ATTRIBUTES keys with no tracklet<->attrs join
+# (attr_recog is fed by the reid node's own TRACKLET input); d14 gates
+# the tracker-fed DAG, this row oracle-gates the storage-fed one.
 
 
 def d15_pipeline_storage_reid(spark: SparkSession, sf_dir: str) -> DataFrame:

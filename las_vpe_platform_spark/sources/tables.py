@@ -95,6 +95,12 @@ def inline_rows(spark: SparkSession, rows, ddl) -> DataFrame:
         return one.select(
             F.inline(F.array().cast(T.ArrayType(schema)))
         )
+    width = len(schema.fields)
+    for i, r in enumerate(rows):
+        if len(r) != width:
+            raise ValueError(
+                f"inline_rows: row {i} has {len(r)} values, schema has {width} fields"
+            )
     structs = [
         F.struct(
             *[F.lit(v).alias(f.name) for v, f in zip(r, schema.fields)]

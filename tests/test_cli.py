@@ -15,9 +15,13 @@ def test_parser_vocabulary():
         ["run", "track-attrrecog", "--videos", "v.parquet", "--output", "/tmp/o"]
     )
     assert args.command == "track-attrrecog"
-    assert args.tracker == "fake"
+    assert args.output == "/tmp/o"
     with pytest.raises(SystemExit):
         p.parse_args(["nope"])
+    # one fixed tracker and recognizer: no provider-selection flags
+    for flag in ("--tracker", "--recognizer"):
+        with pytest.raises(SystemExit):
+            p.parse_args(["run", "track", "--videos", "v.parquet", flag, "fake"])
 
 
 def test_run_unknown_command_exits_2(capsys):

@@ -87,6 +87,18 @@ def test_compact_parquet_table(spark, tmp_path):
     assert spark.read.parquet(target).count() == _fx(spark, "tracklets").count()
 
 
+def test_table_stats_empty_directory(spark, tmp_path):
+    """No parquet file: zero files and NULL sizes (SQL aggregate
+    semantics over an empty input), with the same schema as a
+    populated table."""
+    (tmp_path / "notes.txt").write_text("not parquet")
+    stats = table_stats(spark, str(tmp_path))
+    assert [(f.name, f.dataType.simpleString()) for f in stats.schema.fields] == [
+        ("n_files", "bigint"), ("total_bytes", "bigint"), ("avg_bytes", "double"),
+    ]
+    assert [tuple(r) for r in stats.collect()] == [(0, None, None)]
+
+
 def test_compaction_crash_recovery(spark, tmp_path):
     """Every crash state of the fallback two-rename swap is repairable:
     stale ._compacting, table renamed away to ._old, and the healthy

@@ -49,6 +49,30 @@ def test_compile_track_attrrecog_reid_topology():
     assert succ == {"attr_recog", "reid", "tracklet_saving"}
 
 
+def test_reid_attributes_derive_from_its_tracklets():
+    """The reid stage ranks the ATTRIBUTES keys without joining them
+    back to the TRACKLET input. That is an identity only because, in
+    every command whose reid node has both ports, the ATTRIBUTES parent
+    is an attr_recog node fed by the reid node's own TRACKLET parent."""
+    checked = 0
+    for cmd in COMMANDS:
+        plan = compile_command(cmd)
+        for node in plan.nodes.values():
+            if node.stream != "reid":
+                continue
+            edges = plan.parents_of(node.node_id)
+            parents = {port: pid for pid, port in edges}
+            if not {"TRACKLET", "ATTRIBUTES"} <= parents.keys():
+                continue
+            assert len(parents) == len(edges), cmd  # one parent per port
+            attrs = plan.nodes[parents["ATTRIBUTES"]]
+            assert attrs.stream == "attr_recog", cmd
+            attr_parents = plan.parents_of(attrs.node_id)
+            assert attr_parents == [(parents["TRACKLET"], "TRACKLET")], cmd
+            checked += 1
+    assert checked == 2  # attrrecog-reid and track-attrrecog-reid
+
+
 def test_pipeline_track_reproduces_fixture_tracklets(spark, tmp_path):
     videos = _fx(spark, "videos")
     ex = BatchExecutor(spark, output_dir=str(tmp_path))
@@ -199,9 +223,8 @@ def test_fixture_generation_deterministic(tmp_path):
 def test_cross_encoder_provider_parity(spark):
     """The mapInPandas cross-encoder path (what a real ONNX/torch
     model rides) must score bit-identically to the SQL fake — swapping
-    execution paths through CROSS_ENCODERS can never change results."""
+    execution paths can never change results."""
     from las_vpe_platform_spark.providers import (
-        CROSS_ENCODERS,
         fake_cross_encoder_pandas,
         fake_cross_encoder_sql,
     )
@@ -214,4 +237,3 @@ def test_cross_encoder_provider_parity(spark):
     b = fake_cross_encoder_pandas(pairs).orderBy("doc_id").collect()
     assert [r["doc_id"] for r in a] == [r["doc_id"] for r in b]
     assert all(abs(x["ce_score"] - y["ce_score"]) == 0.0 for x, y in zip(a, b))
-    assert set(CROSS_ENCODERS) == {"fake_sql", "fake_pandas"}

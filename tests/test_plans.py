@@ -95,8 +95,8 @@ def test_d14_single_tracker_invocation(spark, sf_dir):
     # The flagship track->attrrecog->reid DAG (VERDICT r2 'What's
     # wrong' #1): Catalyst does not dedupe shared Python-UDTF subtrees,
     # so if the reid stage joined tracking output against attr output
-    # the tracker mapInPandas would run TWICE in one plan. After the
-    # structural join elimination in BatchExecutor._stage_reid, the
+    # the tracker mapInPandas would run TWICE in one plan. Because
+    # BatchExecutor._stage_reid ranks the attribute keys directly, the
     # tracker subtree runs exactly ONCE — consumed eagerly by the
     # probe-matrix collect in pairwise_similarity_topk — and the only
     # MapInPandas left in the lazy plan is the BLAS scorer streaming

@@ -4,6 +4,9 @@ from __future__ import annotations
 
 from pathlib import Path
 
+import pytest
+
+from las_vpe_platform_spark.sources.tables import inline_rows
 from las_vpe_platform_spark.sources.video import video_files, webcam_stream
 from las_vpe_platform_spark.streaming.engine import run_to_completion
 
@@ -83,3 +86,13 @@ def test_multi_format_ingest_round_trip(spark, sf_dir, tmp_path):
     base = {tuple(r) for r in ev.collect()}
     assert {tuple(r) for r in from_csv.collect()} == base
     assert {tuple(r) for r in from_json.collect()} == base
+
+
+@pytest.mark.parametrize("bad", [("b",), ("b", 2, 3)], ids=["short", "long"])
+def test_inline_rows_rejects_row_arity_mismatch(spark, bad):
+    """A row whose length differs from the schema is an error naming
+    the row, not a silently truncated or padded record."""
+    ddl = "name string, n long"
+    with pytest.raises(ValueError, match="row 1 has"):
+        inline_rows(spark, [("a", 1), bad], ddl)
+    assert [tuple(r) for r in inline_rows(spark, [("a", 1)], ddl).collect()] == [("a", 1)]

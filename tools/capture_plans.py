@@ -61,7 +61,7 @@ HEADLINERS = [
     ("q73_quality_percentile_filter",
      "per-language percent_rank window shuffles on lang only; quality ratios materialize as columns before the composite (no HOF re-evaluation)"),
     ("d14_pipeline_reid",
-     "flagship track->attrrecog->reid DAG; the tracker subtree runs EXACTLY ONCE, consumed eagerly by the probe-matrix collect (r3 structural join elimination in _stage_reid made attrs subsume tracklet keys), so the lazy plan is the BLAS scorer streaming the gallery with the candidate window on probe_key as its only exchange (guarded by tests/test_plans.py::test_d14_single_tracker_invocation)"),
+     "flagship track->attrrecog->reid DAG; the tracker subtree runs EXACTLY ONCE, consumed eagerly by the probe-matrix collect (_stage_reid ranks the attribute keys with no tracklet join), so the lazy plan is the BLAS scorer streaming the gallery with the candidate window on probe_key as its only exchange (guarded by tests/test_plans.py::test_d14_single_tracker_invocation)"),
     ("q68_salted_join_agg",
      "explicit hot-key salting, result-transparent: salts explode onto the BUILD (broadcast) side so the skewed probe side never shuffles; only hash exchange is the final priority aggregate"),
     ("q69_source_overlap",
