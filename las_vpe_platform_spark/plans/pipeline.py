@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from las_vpe_platform_spark.operators.joins import pairwise_similarity_topk
 from las_vpe_platform_spark.operators.routing import term_sig_filter
+from las_vpe_platform_spark.operators.staging import persist_disk
 from las_vpe_platform_spark.providers import (
     fake_recognizer_sql_avg,
     fake_tracker,
@@ -120,6 +121,9 @@ COMMANDS = (
 def compile_command(command: str, params: dict[str, Any] | None = None) -> ExecutionPlan:
     """Command string -> ExecutionPlan (the switch at
     MessageHandlingApp.java:214-337; no optimizer, plan = command shape).
+
+    ``params`` go to the root node (source selection, e.g.
+    ``tracklet_serial_num``) and to the reid node (``k``).
     """
     params = params or {}
     plan = ExecutionPlan()
@@ -139,13 +143,13 @@ def compile_command(command: str, params: dict[str, Any] | None = None) -> Execu
         plan.link(a, plan.add_node(ATTR_SAVING), "ATTRIBUTES")
     elif command == "reid":
         r = plan.add_node(RETRIEVE_TRACKLET_ATTR, params)
-        d = plan.add_node(REID)
+        d = plan.add_node(REID, params)
         plan.link(r, d, "TRACKLET_ATTR")
         plan.link(d, plan.add_node(IDRANK_SAVING), "IDRANK")
     elif command == "attrrecog-reid":
         r = plan.add_node(RETRIEVE_TRACKLET, params)
         a = plan.add_node(ATTR_RECOG)
-        d = plan.add_node(REID)
+        d = plan.add_node(REID, params)
         plan.link(r, a, "TRACKLET")
         plan.link(r, d, "TRACKLET")
         plan.link(a, d, "ATTRIBUTES")
@@ -154,7 +158,7 @@ def compile_command(command: str, params: dict[str, Any] | None = None) -> Execu
     elif command == "track-attrrecog-reid":
         t = plan.add_node(TRACKING, params)
         a = plan.add_node(ATTR_RECOG)
-        d = plan.add_node(REID)
+        d = plan.add_node(REID, params)
         plan.link(t, a, "TRACKLET")
         plan.link(t, d, "TRACKLET")
         plan.link(a, d, "ATTRIBUTES")
@@ -180,6 +184,18 @@ class BatchExecutor:
 
     ``term_sigs`` (optional) applies the P4 cancellation anti-join at
     the source, exactly where SparkStreamingApp.java:253-256 does.
+
+    A node read by more than one downstream node is materialized with
+    ``persist_disk`` (the multi-reference rule, SCALE.md): the tracking
+    output in ``track-attrrecog`` and ``track-attrrecog-reid``, the
+    retrieved tracklets in ``attrrecog-reid``, and the attr_recog output
+    in both reid commands. The first action (the reid stage's probe
+    collect, else the first sink) fills the cache and every other
+    consumer reads it, so the tracker and the recognizer run once per
+    request, as each reference app runs once per task. The frames stay
+    persisted after ``run`` returns so the returned outputs keep reading
+    them; callers release them with ``scoped_persists()`` around the
+    request or ``unpersist_all()`` between requests.
     """
 
     def __init__(
@@ -305,6 +321,8 @@ class BatchExecutor:
                 inputs = {"SOURCE": source}
             inputs.update({k: v for k, v in extra_inputs.items() if k not in inputs})
             df = self._stages[node.stream](node, inputs)
+            if len(node.out_edges) > 1:
+                df = persist_disk(df, node.stream)
             results[node.node_id] = df
             outputs[node.stream] = df
         return outputs

@@ -40,7 +40,10 @@ class CommandHandler:
     ``video_url`` that is a prefix expands to every video under it —
     HDFSReader.listSubfiles parity). ``on_task`` is the execution hook;
     by default tasks are only recorded (tests introspect them), a
-    deployment wires it to BatchExecutor.run.
+    deployment wires it to BatchExecutor.run and wraps each task in
+    ``scoped_persists()``: the executor persists every stage read by
+    several nodes, and the scope releases them once the task's sinks
+    are written instead of letting them pile up across micro-batches.
     """
 
     videos: DataFrame

@@ -14,7 +14,10 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import outside_cached_plans
+from las_vpe_platform_spark import scoped_persists
 from las_vpe_platform_spark.fixtures import FIXTURES_DIR
+from las_vpe_platform_spark.operators import staging
 from las_vpe_platform_spark.plans.pipeline import (
     COMMANDS,
     BatchExecutor,
@@ -109,13 +112,61 @@ def test_pipeline_reid_ranks(spark):
     videos = _fx(spark, "videos").limit(4)
     features = _fx(spark, "features")
     ex = BatchExecutor(spark, gallery=features)
-    out = ex.run(compile_command("track-attrrecog-reid"), videos)
-    ranks = out["reid"].collect()
-    assert len(ranks) > 0
-    for r in ranks:
-        assert 1 <= len(r["id_rank"]) <= 10
-        # rank-1 hit is the probe itself (cosine 1.0 with itself)
-        assert r["id_rank"][0] == r["probe_key"]
+    # k defaults to 10 and, when given, reaches the reid node
+    for params, k in ((None, 10), ({"k": 3}, 3)):
+        with scoped_persists():
+            out = ex.run(compile_command("track-attrrecog-reid", params), videos)
+            ranks = out["reid"].collect()
+        assert len(ranks) > 0
+        assert max(len(r["id_rank"]) for r in ranks) == k
+        for r in ranks:
+            assert 1 <= len(r["id_rank"]) <= k
+            # rank-1 hit is the probe itself (cosine 1.0 with itself)
+            assert r["id_rank"][0] == r["probe_key"]
+
+
+def test_compile_reid_node_gets_params():
+    for cmd in ("reid", "attrrecog-reid", "track-attrrecog-reid"):
+        plan = compile_command(cmd, {"k": 3})
+        reid = next(n for n in plan.nodes.values() if n.stream == "reid")
+        assert reid.exec_data.get("k") == 3, cmd
+
+
+def _cached_build_plan(df) -> str:
+    cached = df.sparkSession._jsparkSession.sharedState().cacheManager().lookupCachedData(df._jdf)
+    return cached.get().cachedRepresentation().cacheBuilder().cachedPlan().toString()
+
+
+def test_pipeline_shared_stages_materialized_once(spark, tmp_path):
+    """track-attrrecog-reid: tracking feeds three nodes and attr_recog
+    two, so both are persisted and every sink reads the caches instead
+    of re-running the tracker and the recognizer; the sinks hold exactly
+    the rows of a run without sinks, and the scope releases the caches."""
+    videos = _fx(spark, "videos").limit(4)
+    features = _fx(spark, "features")
+    plan = compile_command("track-attrrecog-reid")
+    mark = len(staging._PERSISTED)
+    with scoped_persists():
+        out = BatchExecutor(spark, output_dir=str(tmp_path), gallery=features).run(plan, videos)
+        assert out["tracking"].storageLevel.useDisk
+        assert out["attr_recog"].storageLevel.useDisk
+        assert not out["reid"].storageLevel.useDisk  # one consumer
+        attrs_plan = out["attr_saving"]._jdf.queryExecution().executedPlan().toString()
+        assert "MapInPandas" not in outside_cached_plans(attrs_plan)
+        # the recognizer's cache was built from the tracker's cache
+        build = outside_cached_plans(_cached_build_plan(out["attr_recog"]))
+        assert "InMemoryTableScan" in build and "MapInPandas" not in build
+    assert len(staging._PERSISTED) == mark
+
+    with scoped_persists():
+        dry = BatchExecutor(spark, gallery=features).run(plan, videos)
+        keys = {"tracking": "tracklet_key", "attr_recog": "tracklet_key", "reid": "probe_key"}
+        want = {s: dry[s].orderBy(k).collect() for s, k in keys.items()}
+    sinks = {"tracking": "tracklets", "attr_recog": "attributes", "reid": "id_ranks"}
+    for stream, table in sinks.items():
+        rows = spark.read.parquet(str(tmp_path / table)).orderBy(keys[stream]).collect()
+        assert len(rows) > 0, table
+        assert rows == want[stream], table
 
 
 def test_pipeline_term_sig_cancellation(spark):
